@@ -49,13 +49,13 @@ def _t_fan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Pages -> geotag extraction -> z12 tile encode -> PIP assign ->
     pages-per-(tile, feature) counts, on the sf0.001 events-derived pages."""
-    from robosat_spark.operators.spatial_join import assign_broadcast, assign_counts_per_tile
+    from robosat_spark.operators.spatial_join import assign, assign_counts_per_tile
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, "/root/testdata/sf0.001")
     ft = oracle_rect_features(spark)
-    assigned = assign_broadcast(spark, pg, ft, zoom=12)
+    assigned = assign(spark, pg, ft, zoom=12)
     return assign_counts_per_tile(assigned)
 
 
@@ -423,7 +423,7 @@ def _q_iceberg_pages_pip(spark, sf_dir):
     import os
     import tempfile
 
-    from robosat_spark.operators.spatial_join import assign_broadcast
+    from robosat_spark.operators.spatial_join import assign
     from robosat_spark.sources.iceberg import IcebergTable, current_version, write_iceberg
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
@@ -443,7 +443,7 @@ def _q_iceberg_pages_pip(spark, sf_dir):
         )
     pg = IcebergTable(path).scan(spark)
     ft = oracle_rect_features(spark)
-    assigned = assign_broadcast(spark, pg, ft, zoom=7)
+    assigned = assign(spark, pg, ft, zoom=7)
     return assigned.groupBy("feature_id").agg(
         F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls")
     )
@@ -487,13 +487,13 @@ def _q_tile_adjacency(spark, sf_dir):
 
 def _q_pip_assign(spark, sf_dir):
     """The flagship spatial join (J2): REAL cover+PIP operator vs bbox SQL."""
-    from robosat_spark.operators.spatial_join import assign_broadcast
+    from robosat_spark.operators.spatial_join import assign
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, sf_dir)
     ft = oracle_rect_features(spark)
-    assigned = assign_broadcast(spark, pg, ft, zoom=7)
+    assigned = assign(spark, pg, ft, zoom=7)
     return assigned.groupBy("feature_id").agg(
         F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls")
     )
@@ -794,13 +794,13 @@ def _q_pip_assign_salted(spark, sf_dir):
     """The salted-repartition-by-cell variant of the flagship join (the
     skew-kill path, BASELINE.json north_rule) — identical result by
     construction, so it shares pip_assign's oracle."""
-    from robosat_spark.operators.spatial_join import assign_salted
+    from robosat_spark.operators.spatial_join import assign
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, sf_dir)
     ft = oracle_rect_features(spark)
-    assigned = assign_salted(spark, pg, ft, zoom=7, salt=16)
+    assigned = assign(spark, pg, ft, zoom=7, cluster_by_cell=True)
     return assigned.groupBy("feature_id").agg(
         F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls")
     )
@@ -809,13 +809,13 @@ def _q_pip_assign_salted(spark, sf_dir):
 def _q_pip_assign_jvm(spark, sf_dir):
     """All-JVM variant of the flagship join: broadcast cover join + codegen
     crossing-number PIP (no Python workers at all) — same oracle."""
-    from robosat_spark.operators.spatial_join import assign_jvm
+    from robosat_spark.operators.spatial_join import assign_cover_join
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, sf_dir)
     ft = oracle_rect_features(spark)
-    assigned = assign_jvm(spark, pg, ft, zoom=7)
+    assigned = assign_cover_join(spark, pg, ft, zoom=7)
     return assigned.groupBy("feature_id").agg(
         F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls")
     )

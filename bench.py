@@ -37,7 +37,7 @@ def scaling_input(spark, n: int) -> str:
     return path
 
 
-def scaling_job(spark, path: str, repartition_by_cell: bool = False) -> int:
+def scaling_job(spark, path: str, cluster_by_cell: bool = False) -> int:
     """The north-rule scaling workload: parquet scan of pages (with the
     planted hot z18 tile holding ~half the bbox points) -> geotag extraction
     -> z18 tile encode -> broadcast-index PIP count-refine FUSED onto the
@@ -54,9 +54,7 @@ def scaling_job(spark, path: str, repartition_by_cell: bool = False) -> int:
 
     pg = spark.read.parquet(*(path if isinstance(path, list) else [path]))
     ft = features(spark).unionByName(dense_polygon_features(spark))
-    counts = assign_count_by_feature(
-        spark, pg, ft, zoom=18, salt=32, repartition_by_cell=repartition_by_cell
-    )
+    counts = assign_count_by_feature(spark, pg, ft, zoom=18, cluster_by_cell=cluster_by_cell)
     return counts.agg(F.sum("n_pages")).collect()[0][0]
 
 
@@ -199,7 +197,7 @@ def main():
         )[: max(2 * cpus, 8)]  # >= one task per core: every worker warms
         scaling_job(spark, warm_files)
         t0 = time.perf_counter()
-        joined = scaling_job(spark, path, repartition_by_cell=shuffle_variant)
+        joined = scaling_job(spark, path, cluster_by_cell=shuffle_variant)
         dt = time.perf_counter() - t0
         print(
             json.dumps(
@@ -266,7 +264,7 @@ def main():
     steal["suite_32cpu"] = _steal_pct(s0, _cpu_stat())
 
     # flagship e2e on the sf tables (correctness-scale; warmup-dominated)
-    from robosat_spark.operators.spatial_join import assign_broadcast
+    from robosat_spark.operators.spatial_join import assign
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
@@ -275,7 +273,7 @@ def main():
         t0 = time.perf_counter()
         pg = pages_from_events(spark, sf_dir)
         ft = oracle_rect_features(spark)
-        assigned = assign_broadcast(spark, pg, ft, zoom=7)
+        assigned = assign(spark, pg, ft, zoom=7)
         assigned.count()
         e2e_trials.append(round(time.perf_counter() - t0, 3))
     timings["flagship_e2e"] = min(e2e_trials)

@@ -119,10 +119,11 @@ def cmd_dedupe(spark, args):
 
 
 def cmd_assign(spark, args):
-    from .operators.spatial_join import assign_salted
+    from .operators.spatial_join import assign
 
     pages = spark.read.parquet(args.pages)
-    assigned = assign_salted(spark, pages, _features(spark, args.features), args.zoom)
+    features = _features(spark, args.features)
+    assigned = assign(spark, pages, features, args.zoom, cluster_by_cell=True)
     assigned.write.mode("overwrite").parquet(args.out)
 
 

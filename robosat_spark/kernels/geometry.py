@@ -81,8 +81,33 @@ def bbox_intersects(a, b) -> bool:
     return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
 
 
-def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd (crossing number) point-in-polygon test.
+def ring_edges(ring):
+    """Prepared edge table of one ring for :func:`points_in_edges`:
+    ``(minx, maxx, miny, maxy, x1, y1, y2, inv_dy)``, or None for a ring
+    of fewer than 3 vertices (it contains no point).
+
+    The bbox, the open/roll and the edge slopes are invariant across every
+    batch of points tested against the ring, so a caller testing many
+    batches (the spatial-join refine) prepares them once. Horizontal edges
+    are dropped: their straddle term is identically false."""
+    r = open_ring(ring)
+    if len(r) < 3:
+        return None
+    x1, y1 = r[:, 0], r[:, 1]
+    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+    keep = y1 != y2
+    x1k, y1k, x2k, y2k = x1[keep], y1[keep], x2[keep], y2[keep]
+    inv_dy = (x2k - x1k) / (y2k - y1k)
+    return (
+        float(x1.min()), float(x1.max()), float(y1.min()), float(y1.max()),
+        x1k[None, :], y1k[None, :], y2k[None, :], inv_dy[None, :],
+    )
+
+
+def points_in_edges(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
+    """Vectorized even-odd (crossing number) point-in-polygon test against
+    prepared edge tables (:func:`ring_edges`): inside ``edges[0]`` (the
+    exterior) and outside every later table (the holes).
 
     Many points against one ring: O(P*E), evaluated in point blocks so the
     (block x edges) temporaries stay cache-resident instead of streaming
@@ -91,48 +116,36 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
     edge loop for points that cannot be inside. Points exactly on an edge
     may land either side (consistent with shapely's boundary fuzz — the
     reference never relies on boundary points)."""
-    r = open_ring(ring)
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    n = px.shape[0]
-    out = np.zeros(n, dtype=bool)
-    if n == 0 or len(r) < 3:
-        return out
+    inside = None
+    for i, edge in enumerate(edges):
+        out = np.zeros(px.shape[0], dtype=bool)
+        if edge is not None:
+            minx, maxx, miny, maxy, x1, y1, y2, inv_dy = edge
+            cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
+            idx = np.nonzero(cand)[0]
+            block = 1024
+            for s in range(0, idx.size, block):
+                sel = idx[s : s + block]
+                bx = px[sel][:, None]
+                by = py[sel][:, None]
+                straddle = (y1 > by) != (y2 > by)
+                xint = x1 + (by - y1) * inv_dy
+                crossings = np.sum(straddle & (bx < xint), axis=1)
+                out[sel] = (crossings % 2) == 1
+        inside = out if i == 0 else (inside & ~out)
+    return inside
 
-    # bbox pre-cull (cheap O(P); the filter half of filter-refine)
-    minx, miny = r[:, 0].min(), r[:, 1].min()
-    maxx, maxy = r[:, 0].max(), r[:, 1].max()
-    cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-    idx = np.nonzero(cand)[0]
-    if idx.size == 0:
-        return out
 
-    x1 = r[:, 0][None, :]
-    y1 = r[:, 1][None, :]
-    x2 = np.roll(r[:, 0], -1)[None, :]
-    y2 = np.roll(r[:, 1], -1)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        inv_dy = (x2 - x1) / (y2 - y1)
-
-    block = 1024
-    for s in range(0, idx.size, block):
-        sel = idx[s : s + block]
-        bx = px[sel][:, None]
-        by = py[sel][:, None]
-        straddle = (y1 > by) != (y2 > by)
-        with np.errstate(invalid="ignore"):
-            xint = x1 + (by - y1) * inv_dy
-        crossings = np.sum(straddle & (bx < xint), axis=1)
-        out[sel] = (crossings % 2) == 1
-    return out
+def points_in_ring(px, py, ring) -> np.ndarray:
+    """Even-odd point-in-polygon test of many points against one ring."""
+    return points_in_polygon(px, py, [ring])
 
 
 def points_in_polygon(px, py, rings) -> np.ndarray:
     """PIP for a polygon with holes: inside exterior, outside every hole."""
-    inside = points_in_ring(px, py, rings[0])
-    for hole in rings[1:]:
-        inside &= ~points_in_ring(px, py, hole)
-    return inside
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    return points_in_edges(px, py, [ring_edges(r) for r in rings])
 
 
 def simplify_dp(ring: np.ndarray, epsilon: float, closed: bool = True) -> np.ndarray:

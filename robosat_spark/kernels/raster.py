@@ -175,7 +175,9 @@ def find_contours(mask: np.ndarray):
             if fij == 0:
                 continue
             outer = fij == 1 and row[j - 1] == 0
-            hole = fij >= 1 and row[j + 1] == 0
+            # an outer border takes precedence (Suzuki-Abe step 1): a first
+            # pixel with background on both sides starts an outer border
+            hole = not outer and fij >= 1 and row[j + 1] == 0
             if outer or hole:
                 nbd += 1
                 if hole:

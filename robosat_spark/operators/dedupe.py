@@ -96,6 +96,15 @@ def dedupe(
         F.col("feature_id").alias("osm_id"), F.col("rings").alias("osm_rings")
     )
     cand = pairs.join(pred_payload, "pred_id").join(osm_payload, "osm_id", "left_outer")
+    # A cell without osm features leaves a null osm side. When a whole
+    # Arrow batch holds only null (or empty) rings, the zero-length ring
+    # list under them crashes the pandas conversion in the Python worker,
+    # so null rings cross as one empty ring; ``judge`` skips the row by its
+    # null osm_id.
+    ring_type = osm.schema["rings"].dataType.elementType
+    cand = cand.withColumn(
+        "osm_rings", F.coalesce("osm_rings", F.array(F.array().cast(ring_type)))
+    )
 
     def judge(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(key[0])

@@ -1,24 +1,30 @@
 """Point-in-polygon page->feature assignment: the flagship spatial join (J2/J3).
 
-Two physical strategies, chosen by the caller (Catalyst can't know spatial
-semantics, so the choice is explicit — SURVEY.md §4):
+Three entry points over two physical plans (Catalyst can't know spatial
+semantics, so the plan is explicit — SURVEY.md §4):
 
-``assign_broadcast``
-    Filter-refine with a *broadcast* cover table: pages keep their scan
-    partitioning (ZERO shuffle of the big side), the per-tile feature lists
-    and ring coordinates ride a Spark broadcast, and the exact PIP refine is
-    a vectorized Arrow batch pass. The right plan whenever the polygon side
-    fits in executor memory (the common case: features « pages).
+``assign``
+    The row readout. Filter-refine against a *broadcast* per-tile feature
+    index: pages keep their scan partitioning (zero shuffle of the big
+    side), a broadcast semi-join on the covered tiles drops every point
+    whose cell holds no feature, and the exact PIP refine is a vectorized
+    Arrow batch pass (``kernels.geometry.points_in_edges``).
+    ``cluster_by_cell=True`` adds a salted repartition by cell before the
+    refine (BASELINE.json north_rule): pages are hashed into salt buckets
+    *within* each cell, so one hot tile spreads over many tasks and the
+    output comes out cell-clustered.
 
-``assign_salted``
-    Explicit salted-repartition-by-cell + per-partition spatial index
-    (BASELINE.json north_rule): pages are hashed into ``salt`` buckets
-    *within* each hot cell so one hot tile (the skew fixture holds ~50% of
-    points) spreads over many tasks; each task refines against the
-    broadcast per-tile index. The scale path when the candidate join is too
-    hot for a single task, and the evidence path for skew handling.
+``assign_count_by_feature``
+    The count readout of the same plan, with the aggregation pushed
+    through the refine (map-side combine in the Arrow pass).
 
-Both refine with the same NumPy kernel; results are identical.
+``assign_cover_join``
+    All-JVM: broadcast hash join of the points against the exploded
+    (tile, feature, rings) cover table with the codegen crossing-number
+    ``point_in_rings`` in the join condition. No driver-collected index and
+    no Python workers, so it also runs on a stream (streaming.ingest).
+
+All three return identical rows; the polygon side must fit a broadcast.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
-from ..kernels.geometry import as_ring
+from ..kernels.geometry import as_ring, points_in_edges, ring_edges
 
 
 def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
@@ -60,6 +66,7 @@ def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
     # 800k-row 10x points stage and by all 50 oracle gates at two SFs.
     # Measured on the 10x set at 32 cores (noop sink): 8.0 s plain ->
     # 2.0-2.4 s with a filter-side WHEN -> 1.4-2.0 s with this shape.
+    # tests/test_streaming.py pins the Filter-above-Project shape.
     nd = F.spark_partition_id() >= 0
     pts = pages.select(
         "url",
@@ -95,59 +102,40 @@ def _collect_feature_index(features: DataFrame, zoom: int):
     return tile_map, rings_map
 
 
-def _precompute_polygons(rings_map):
-    """rings_map -> {fid: [per-ring edge tables]} hoisted ONCE per task
-    (guide §4.5): open_ring/roll/div and the bbox are loop-invariant
-    across every batch and every candidate tile of a feature, and at
-    ~50 us of NumPy fixed cost per PIP call they dominated the refine
-    on small per-tile row groups. Horizontal edges are dropped outright
-    (their straddle term is identically false). First entry = exterior,
-    rest = holes — same convention as ``points_in_polygon``."""
-    from ..kernels.geometry import open_ring
+def _candidates(
+    spark: SparkSession,
+    pages: DataFrame,
+    features: DataFrame,
+    zoom: int,
+    cols: list[str],
+    cluster_by_cell: bool,
+):
+    """-> (broadcast index, candidate points projected to ``cols``): the
+    filter half of filter-refine, shared by both broadcast readouts.
 
-    pre = {}
-    for fid, rings in rings_map.items():
-        pres = []
-        for ring in rings:
-            r = open_ring(np.asarray(ring, dtype=np.float64))
-            x1, y1 = r[:, 0], r[:, 1]
-            x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-            keep = y1 != y2
-            x1k, y1k = x1[keep], y1[keep]
-            x2k, y2k = x2[keep], y2[keep]
-            inv_dy = (x2k - x1k) / (y2k - y1k)
-            pres.append(
-                (
-                    float(x1.min()), float(x1.max()),
-                    float(y1.min()), float(y1.max()),
-                    x1k[None, :], y1k[None, :], y2k[None, :], inv_dy[None, :],
-                )
-            )
-        pre[fid] = pres
-    return pre
-
-
-def _pip_pre(px, py, pres):
-    """Blocked even-odd PIP against precomputed edge tables — identical
-    arithmetic (and therefore identical booleans) to
-    ``kernels.geometry.points_in_polygon``, minus the per-call setup."""
-    inside = None
-    for i, (minx, maxx, miny, maxy, x1, y1, y2, inv_dy) in enumerate(pres):
-        out = np.zeros(px.shape[0], dtype=bool)
-        cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-        idx = np.nonzero(cand)[0]
-        if idx.size and x1.size:
-            block = 1024
-            for s in range(0, idx.size, block):
-                sel = idx[s : s + block]
-                bx = px[sel][:, None]
-                by = py[sel][:, None]
-                straddle = (y1 > by) != (y2 > by)
-                xint = x1 + (by - y1) * inv_dy
-                crossings = np.sum(straddle & (bx < xint), axis=1)
-                out[sel] = (crossings % 2) == 1
-        inside = out if i == 0 else (inside & ~out)
-    return inside
+    Index collect -> broadcast -> JVM-side broadcast semi-join on the
+    covered-tile set, which kills every point whose cell can't contain a
+    feature BEFORE any shuffle or Arrow transfer (at web scale most points
+    are elsewhere, so this is the biggest data-volume cut in the plan, kept
+    inside whole-stage codegen) -> projection to the columns the refine
+    reads (Catalyst cannot prune into a UDF) -> optionally a salted
+    repartition by cell. The salt is a hash of the candidate row; the
+    partition count is explicit because AQE would otherwise coalesce the
+    byte-light exchange and strand the compute-heavy refine on a handful
+    of tasks."""
+    index = _collect_feature_index(features, zoom)
+    bc = spark.sparkContext.broadcast(index)
+    cover_tiles = spark.createDataFrame([(int(t),) for t in index[0]], "tile_id LONG")
+    pts = geotagged_points(pages, zoom).join(F.broadcast(cover_tiles), "tile_id", "left_semi")
+    pts = pts.select(*cols)
+    if cluster_by_cell:
+        salt = max(32, 2 * spark.sparkContext.defaultParallelism)
+        pts = (
+            pts.withColumn("salt", F.pmod(F.hash(*cols), F.lit(salt)).cast("int"))
+            .repartition(salt, F.col("tile_id"), F.col("salt"))
+            .drop("salt")
+        )
+    return bc, pts
 
 
 def _rows_by_feature(tids, tile_map):
@@ -168,163 +156,94 @@ def _rows_by_feature(tids, tile_map):
         rows = order[s:e]
         for fid in fids:
             per_fid.setdefault(fid, []).append(rows)
-    return per_fid
+    for fid, row_lists in per_fid.items():
+        yield fid, row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
 
 
-def _refine_matches(lon, lat, tids, tile_map, pre_map):
-    """Shared NumPy core: -> (row indices, feature ids) of PIP hits."""
-    out_idx, out_fid = [], []
-    for fid, row_lists in _rows_by_feature(tids, tile_map).items():
-        rows = row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
-        inside = _pip_pre(lon[rows], lat[rows], pre_map[fid])
-        hit = rows[inside]
-        if hit.size:
-            out_idx.append(hit)
-            out_fid.append(np.full(hit.size, fid, dtype=np.int64))
-    if not out_idx:
-        return None, None
-    return np.concatenate(out_idx), np.concatenate(out_fid)
+_ROW_COLS = ["url", "warc_ts", "lon", "lat", "tile_id"]
+_ASSIGN_SCHEMA = (
+    "url STRING, warc_ts TIMESTAMP, lon DOUBLE, lat DOUBLE, tile_id LONG, feature_id LONG"
+)
+_COUNT_COLS = ["lon", "lat", "tile_id"]
+_COUNT_SCHEMA = "tile_id LONG, feature_id LONG, n LONG"
 
 
-def _refine_factory(bc_index):
+def _refine_factory(bc_index, counts: bool):
     """Arrow-native PIP refine for ``mapInArrow``: numeric columns are read
-    zero-copy into NumPy, hits are materialized with ``RecordBatch.take``
-    (Arrow C++), and the url/warc_ts payload NEVER becomes Python objects.
+    zero-copy into NumPy and each candidate feature is tested once per
+    batch against edge tables prepared once per task (guide §4.5).
 
-    This matters enormously at scale: the earlier pandas form turned every
-    url into a Python string object and back (15M allocations per 15M rows),
-    which saturated memory bandwidth — 32 workers ran no faster than 8.
-    The Arrow form keeps payload bytes in Arrow buffers end to end."""
+    Row readout (``counts=False``): hits are materialized with
+    ``RecordBatch.take`` (Arrow C++), so the url/warc_ts payload NEVER
+    becomes Python objects — the earlier pandas form turned every url
+    into a Python string and back, which saturated memory bandwidth (32
+    workers ran no faster than 8).
+
+    Count readout (``counts=True``): MAP-SIDE COMBINE — each batch emits
+    one (tile_id, feature_id, n) row per hit group instead of one row per
+    hit, so output bytes drop from O(hits) to O(groups per batch)."""
 
     def refine(batches):
         import pyarrow as pa
 
         tile_map, rings_map = bc_index.value
-        pre_map = _precompute_polygons(rings_map)  # once per task (§4.5)
+        edges = {fid: [ring_edges(r) for r in rings] for fid, rings in rings_map.items()}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             lon = batch.column("lon").to_numpy(zero_copy_only=False)
             lat = batch.column("lat").to_numpy(zero_copy_only=False)
             tids = batch.column("tile_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            idx, fids = _refine_matches(lon, lat, tids, tile_map, pre_map)
-            if idx is None:
+            hits = []
+            for fid, rows in _rows_by_feature(tids, tile_map):
+                hit = rows[points_in_edges(lon[rows], lat[rows], edges[fid])]
+                if hit.size:
+                    hits.append((fid, hit))
+            if not hits:
                 continue
-            take = pa.array(idx)
             # mapInArrow binds output columns POSITIONALLY to the declared
-            # schema — emit exactly the _ASSIGN_SCHEMA order
-            out_names = ["url", "warc_ts", "lon", "lat", "tile_id"]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(name).take(take) for name in out_names]
-                + [pa.array(fids, type=pa.int64())],
-                names=out_names + ["feature_id"],
-            )
+            # schema — emit exactly the schema's order
+            if counts:
+                groups = [(fid, *np.unique(tids[hit], return_counts=True)) for fid, hit in hits]
+                columns = [
+                    np.concatenate([t for _, t, _ in groups]),
+                    np.concatenate([np.full(t.size, fid) for fid, t, _ in groups]),
+                    np.concatenate([n for _, _, n in groups]),
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=pa.int64()) for c in columns],
+                    names=["tile_id", "feature_id", "n"],
+                )
+            else:
+                take = pa.array(np.concatenate([hit for _, hit in hits]))
+                fids = np.concatenate([np.full(hit.size, fid) for fid, hit in hits])
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(name).take(take) for name in _ROW_COLS]
+                    + [pa.array(fids, type=pa.int64())],
+                    names=_ROW_COLS + ["feature_id"],
+                )
 
     return refine
 
 
-_ASSIGN_SCHEMA = (
-    "url STRING, warc_ts TIMESTAMP, lon DOUBLE, lat DOUBLE, tile_id LONG, feature_id LONG"
-)
-
-
-def _tile_prefilter(spark: SparkSession, pts: DataFrame, tile_map: dict) -> DataFrame:
-    """JVM-side broadcast semi-join on the covered-tile set: kills every
-    point whose cell can't contain a feature BEFORE any shuffle or Arrow
-    transfer. At web scale most points are elsewhere (the world is sparse),
-    so this is the single biggest data-volume cut in the plan — the
-    filter half of filter-refine, kept inside whole-stage codegen."""
-    cover_tiles = spark.createDataFrame(
-        [(int(t),) for t in tile_map.keys()], "tile_id LONG"
-    )
-    return pts.join(F.broadcast(cover_tiles), "tile_id", "left_semi")
-
-
-def assign_broadcast(
-    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
-) -> DataFrame:
-    """Broadcast filter-refine PIP assignment. No shuffle of pages.
-
-    Plan: scan -> regex/tile-encode (codegen) -> broadcast semi-join
-    tile prefilter (JVM) -> mapInPandas exact refine against the broadcast
-    index. Candidate rows never hit a shuffle."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    return pts.mapInArrow(_refine_factory(bc), _ASSIGN_SCHEMA)
-
-
-def assign_salted(
+def assign(
     spark: SparkSession,
     pages: DataFrame,
     features: DataFrame,
     zoom: int,
-    salt: int = 16,
+    cluster_by_cell: bool = False,
 ) -> DataFrame:
-    """Salted repartition-by-cell + per-partition broadcast index.
+    """-> (url, warc_ts, lon, lat, tile_id, feature_id): one row per
+    (page, containing feature).
 
-    ``repartition(salted_key)`` spreads each hot cell over ``salt`` tasks;
-    the refine is identical. Use when candidate density per tile is too
-    high for single tasks (hot-tile skew) and the downstream consumer
-    benefits from cell-clustered output (e.g. a groupBy(tile) follows —
-    the shuffle is then shared, not extra)."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    salted = pts.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
-    salted = salted.repartition(F.col("tile_id"), F.col("salt")).drop("salt")
-    return salted.mapInArrow(_refine_factory(bc), _ASSIGN_SCHEMA)
-
-
-def _refine_group_counts(lon, lat, tids, tile_map, pre_map):
-    """Count variant of ``_refine_matches``: per-(tile, feature) hit
-    counts via one PIP call per FEATURE (its hits are re-bucketed into
-    tiles with a cheap integer unique) — no per-hit row materialization."""
-    out = []
-    for fid, row_lists in _rows_by_feature(tids, tile_map).items():
-        rows = row_lists[0] if len(row_lists) == 1 else np.concatenate(row_lists)
-        inside = _pip_pre(lon[rows], lat[rows], pre_map[fid])
-        hit = rows[inside]
-        if hit.size:
-            ts, cs = np.unique(tids[hit], return_counts=True)
-            out.extend(
-                (int(t), fid, int(c)) for t, c in zip(ts.tolist(), cs.tolist())
-            )
-    return out
-
-
-def _count_refine_factory(bc_index):
-    """Count-only PIP refine with MAP-SIDE COMBINE: each Arrow batch emits
-    one (tile_id, feature_id, n) row per hit group instead of one row per
-    hit. The aggregation-pushdown path for count readouts — output bytes
-    drop from O(hits) to O(distinct groups per batch), and no payload
-    column ever crosses the Arrow boundary."""
-
-    def refine(batches):
-        import pyarrow as pa
-
-        tile_map, rings_map = bc_index.value
-        pre_map = _precompute_polygons(rings_map)  # once per task (§4.5)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False)
-            tids = batch.column("tile_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            groups = _refine_group_counts(lon, lat, tids, tile_map, pre_map)
-            if not groups:
-                continue
-            t_arr, f_arr, n_arr = zip(*groups)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(t_arr, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.asarray(f_arr, dtype=np.int64), type=pa.int64()),
-                    pa.array(np.asarray(n_arr, dtype=np.int64), type=pa.int64()),
-                ],
-                names=["tile_id", "feature_id", "n"],
-            )
-
-    return refine
+    Plan: scan -> geotag/tile-encode (codegen) -> broadcast semi-join tile
+    prefilter -> Arrow exact refine against the broadcast index. Without
+    ``cluster_by_cell`` candidate rows never hit a shuffle; with it they
+    are salted and repartitioned by cell first — for downstream consumers
+    that benefit from cell-clustered output (e.g. a groupBy(tile) then
+    shares the exchange) or per-tile sinks."""
+    bc, pts = _candidates(spark, pages, features, zoom, _ROW_COLS, cluster_by_cell)
+    return pts.mapInArrow(_refine_factory(bc, counts=False), _ASSIGN_SCHEMA)
 
 
 def assign_count_by_feature(
@@ -332,42 +251,27 @@ def assign_count_by_feature(
     pages: DataFrame,
     features: DataFrame,
     zoom: int,
-    salt: int = 32,
-    repartition_by_cell: bool = False,
+    cluster_by_cell: bool = False,
 ) -> DataFrame:
     """-> (tile_id, feature_id, n_pages): the count readout of the flagship
     join with aggregation pushed THROUGH the spatial refine.
 
     Default plan (no shuffle of points at all): scan -> geotag/encode
     (codegen) -> broadcast semi-join prefilter -> project to the 3 numeric
-    columns the count needs (Catalyst cannot prune into a UDF, so the
-    operator does it) -> Arrow count-refine FUSED onto the scan partitions
-    with map-side combine -> tiny final groupBy. With a broadcast index the
-    refine is embarrassingly parallel and scan order already spreads any
-    hot cell across every partition — repartitioning by cell would CREATE
-    the skew the salt then has to fix, and at cluster scale the avoided
-    candidate shuffle is network traffic, not page-cache I/O. Measured
-    2->8-core scaling efficiency rose from 0.77 (salted shuffle) to 0.87
-    (fused) on the 60M-row north-rule job at equal 8-core wall time.
+    columns the count needs -> Arrow count-refine FUSED onto the scan
+    partitions with map-side combine -> tiny final groupBy. With a
+    broadcast index the refine is embarrassingly parallel and scan order
+    already spreads any hot cell across every partition — repartitioning
+    by cell would CREATE the skew the salt then has to fix, and at cluster
+    scale the avoided candidate shuffle is network traffic, not page-cache
+    I/O. Measured 2->8-core scaling efficiency rose from 0.77 (salted
+    shuffle) to 0.87 (fused) on the 60M-row north-rule job at equal 8-core
+    wall time.
 
-    ``repartition_by_cell=True`` restores the salted repartition for
-    consumers that need cell-clustered output partitioning (e.g. a
-    groupBy(tile) stage that reuses the exchange, or per-tile sinks)."""
-    index = _collect_feature_index(features, zoom)
-    bc = spark.sparkContext.broadcast(index)
-    pts = _tile_prefilter(spark, geotagged_points(pages, zoom), index[0])
-    slim = pts.select("lon", "lat", "tile_id")
-    if repartition_by_cell:
-        # explicit partition count: AQE would otherwise coalesce this (now
-        # byte-light) exchange down to a handful of partitions and strand
-        # the compute-heavy refine on too few tasks
-        nparts = max(salt, spark.sparkContext.defaultParallelism * 2)
-        slim = slim.withColumn(
-            "salt", F.pmod(F.hash("lon", "lat"), F.lit(salt)).cast("int")
-        ).repartition(nparts, F.col("tile_id"), F.col("salt")).drop("salt")
-    partial = slim.mapInArrow(
-        _count_refine_factory(bc), "tile_id LONG, feature_id LONG, n LONG"
-    )
+    ``cluster_by_cell=True`` restores the salted repartition for consumers
+    that need cell-clustered output partitioning."""
+    bc, pts = _candidates(spark, pages, features, zoom, _COUNT_COLS, cluster_by_cell)
+    partial = pts.mapInArrow(_refine_factory(bc, counts=True), _COUNT_SCHEMA)
     return partial.groupBy("tile_id", "feature_id").agg(F.sum("n").alias("n_pages"))
 
 
@@ -397,17 +301,18 @@ def point_in_rings(px, py, rings):
     return total % 2 == 1
 
 
-def assign_jvm(
+def assign_cover_join(
     spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
 ) -> DataFrame:
     """All-JVM PIP assignment: cover equi-join + codegen crossing-number.
 
     Plan: scan -> geotag/tile-encode (codegen) -> broadcast hash join on
     tile_id against the exploded (tile, feature, rings) cover table ->
-    ``point_in_rings`` filter — one JVM pipeline end-to-end, no shuffle of
-    pages, no Python workers. The fastest path when per-tile candidate
-    counts are modest (each candidate costs O(vertices) in codegen);
-    ``assign_salted`` remains the skew/shuffle-controlling variant."""
+    ``point_in_rings`` inside the join condition — one JVM pipeline end to
+    end, no shuffle of pages, no Python workers, no driver collect. The
+    fastest path when per-tile candidate counts are modest (each candidate
+    costs O(vertices) in codegen); it is stateless, so it also runs
+    unchanged under Structured Streaming."""
     from .cover import cover_tile_ids
 
     cand_feats = cover_tile_ids(features, zoom).join(
@@ -425,75 +330,6 @@ def assign_jvm(
     return cand.select(
         "url", "warc_ts", "lon", "lat", pts["tile_id"].alias("tile_id"), "feature_id"
     )
-
-
-def assign_distributed(
-    spark: SparkSession, pages: DataFrame, features: DataFrame, zoom: int
-) -> DataFrame:
-    """Fully distributed cover equi-join PIP: the feature side is exploded
-    to (tile_id, feature_id, rings) and hash/sort-merge-joined on tile_id —
-    NO broadcast, NO driver collect — so the polygon side can itself be
-    web-scale (the one case the broadcast-index paths cannot serve). Same
-    codegen crossing-number refine as ``assign_jvm``."""
-    from .cover import cover_tile_ids
-
-    cand_feats = cover_tile_ids(features, zoom).join(
-        features.select("feature_id", "rings"), "feature_id"
-    )
-    pts = geotagged_points(pages, zoom)
-    cand = pts.join(
-        cand_feats,
-        (pts["tile_id"] == cand_feats["tile_id"])
-        & point_in_rings(pts["lon"], pts["lat"], cand_feats["rings"]),
-    )
-    return cand.select(
-        "url", "warc_ts", "lon", "lat", pts["tile_id"].alias("tile_id"), "feature_id"
-    )
-
-
-def estimate_feature_bytes(features: DataFrame) -> int:
-    """One tiny aggregation on the (small-side) feature table: vertex count
-    -> rough in-memory index size (16 B/vertex + 96 B/feature overhead for
-    dict slots and ndarray headers)."""
-    row = features.select(
-        F.count("*").alias("n"),
-        F.sum(
-            F.aggregate("rings", F.lit(0), lambda acc, r: acc + F.size(r))
-        ).alias("verts"),
-    ).collect()[0]
-    n = int(row["n"] or 0)
-    verts = int(row["verts"] or 0)
-    return verts * 16 + n * 96
-
-
-def choose_assign_strategy(
-    features: DataFrame, max_broadcast_bytes: int = 64 << 20
-) -> str:
-    """'broadcast' when the collected feature index comfortably fits the
-    driver/executor broadcast budget, else 'distributed'. Kept separate
-    from ``assign_auto`` so the decision is unit-testable."""
-    return (
-        "broadcast"
-        if estimate_feature_bytes(features) <= max_broadcast_bytes
-        else "distributed"
-    )
-
-
-def assign_auto(
-    spark: SparkSession,
-    pages: DataFrame,
-    features: DataFrame,
-    zoom: int,
-    max_broadcast_bytes: int = 64 << 20,
-) -> DataFrame:
-    """Auto-select the physical strategy for the flagship join (review
-    item: don't make the caller guess): broadcast filter-refine while the
-    feature index fits in the broadcast budget, distributed cover equi-join
-    beyond it. Both produce identical rows (forced-path equality is
-    unit-tested in tests/test_skew_and_pipeline.py)."""
-    if choose_assign_strategy(features, max_broadcast_bytes) == "broadcast":
-        return assign_broadcast(spark, pages, features, zoom)
-    return assign_distributed(spark, pages, features, zoom)
 
 
 def assign_counts_per_tile(assigned: DataFrame) -> DataFrame:

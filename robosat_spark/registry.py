@@ -93,12 +93,9 @@ def _register_builtins() -> None:
         ("soft_vote", ensemble.soft_vote),
         ("class_histogram", weights.class_histogram),
         ("connected_components", components.connected_components),
-        ("assign_broadcast", spatial_join.assign_broadcast),
-        ("assign_salted", spatial_join.assign_salted),
-        ("assign_jvm", spatial_join.assign_jvm),
+        ("assign", spatial_join.assign),
         ("assign_count_by_feature", spatial_join.assign_count_by_feature),
-        ("assign_distributed", spatial_join.assign_distributed),
-        ("assign_auto", spatial_join.assign_auto),
+        ("assign_cover_join", spatial_join.assign_cover_join),
         ("knn_bruteforce", knn.knn_bruteforce),
         ("knn_cells", knn.knn_cells),
         ("ann_ivf", ann.ann_ivf),

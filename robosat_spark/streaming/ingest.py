@@ -8,8 +8,9 @@ The engine extension: a file-source stream over a pages directory with
 - a watermark on ``warc_ts`` to bound state for late data,
 - ``dropDuplicates`` on (url) within the watermark — the streaming analog
   of the latest-snapshot/as-of dedup,
-- the SAME geotag-extraction + tile-encode expressions as the batch path
-  (they are pure Column expressions, so batch/stream parity is free), and
+- the SAME geotag-extraction + tile-encode operator as the batch path
+  (``spatial_join.geotagged_points``, pure Column expressions, so
+  batch/stream parity is free), and
 - tumbling-window page counts per tile.
 
 Tests drive it with ``trigger(availableNow=True)`` so the stream drains the
@@ -67,26 +68,12 @@ def streaming_tile_counts(
 ) -> DataFrame:
     """Geotag -> tile encode -> tumbling-window counts per tile.
 
-    Reuses the exact batch expressions — the SAME ``geotag_*_fast``
-    variants as spatial_join.geotagged_points, so batch/stream parity holds
-    on any input, not just the fixture contract (the fast substring scan
-    and the regex variant disagree on non-trailing geo tokens)."""
-    from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
+    The point prep is the batch ``spatial_join.geotagged_points`` itself
+    (same fast geotag parse, same single-evaluation barrier), so
+    batch/stream parity holds on any input."""
+    from ..operators.spatial_join import geotagged_points
 
-    lon = geotag_lon_fast(F.col("text"))
-    lat = geotag_lat_fast(F.col("text"))
-    # always-true non-deterministic wrap: same single-evaluation barrier
-    # as batch geotagged_points (spark_partition_id is streaming-legal;
-    # without it the isNotNull filter re-inlines the parse below)
-    nd = F.spark_partition_id() >= 0
-    pts = (
-        pages.withWatermark("warc_ts", watermark)
-        .select("url", "warc_ts", F.when(nd, lon).alias("lon"), F.when(nd, lat).alias("lat"))
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .withColumn(
-            "tile_id", pack_tile_id(zoom, tile_x(F.col("lon"), zoom), tile_y(F.col("lat"), zoom))
-        )
-    )
+    pts = geotagged_points(pages.withWatermark("warc_ts", watermark), zoom)
     return (
         pts.groupBy(F.window("warc_ts", window).alias("w"), F.col("tile_id"))
         .agg(F.count("*").alias("n_pages"))
@@ -173,33 +160,15 @@ def streaming_feature_counts(
     stream-static broadcast join against the exploded cover table ->
     codegen point-in-rings refine -> windowed counts per feature.
 
-    The assign_jvm plan is stateless JVM end to end, so it runs under
-    Structured Streaming unchanged — stream-static joins with a broadcast
-    static side need no state store; only the windowed count keeps state
-    (bounded by the watermark)."""
-    from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
-    from ..operators.cover import cover_tile_ids
-    from ..operators.spatial_join import point_in_rings
+    This is the batch ``spatial_join.assign_cover_join`` itself: its plan is
+    stateless JVM end to end, so it runs under Structured Streaming
+    unchanged — stream-static joins with a broadcast static side need no
+    state store; only the windowed count keeps state (bounded by the
+    watermark)."""
+    from ..operators.spatial_join import assign_cover_join
 
-    lon = geotag_lon_fast(F.col("text"))
-    lat = geotag_lat_fast(F.col("text"))
-    # same streaming-legal single-evaluation barrier as streaming_tile_counts
-    nd = F.spark_partition_id() >= 0
-    pts = (
-        pages.withWatermark("warc_ts", watermark)
-        .select("url", "warc_ts", F.when(nd, lon).alias("lon"), F.when(nd, lat).alias("lat"))
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .withColumn(
-            "tile_id", pack_tile_id(zoom, tile_x(F.col("lon"), zoom), tile_y(F.col("lat"), zoom))
-        )
-    )
-    cand_feats = cover_tile_ids(features, zoom).join(
-        F.broadcast(features.select("feature_id", "rings")), "feature_id"
-    )
-    joined = pts.join(
-        cand_feats.hint("broadcast"),
-        (pts["tile_id"] == cand_feats["tile_id"])
-        & point_in_rings(pts["lon"], pts["lat"], cand_feats["rings"]),
+    joined = assign_cover_join(
+        pages.sparkSession, pages.withWatermark("warc_ts", watermark), features, zoom
     )
     return (
         joined.groupBy(F.window("warc_ts", window).alias("w"), F.col("feature_id"))

@@ -1,18 +1,16 @@
 """Raster kernel tests: burn goldens, morphology, contours, cover."""
 
-import json
-
 import numpy as np
 import pytest
 
 from robosat_spark.kernels import geometry as G
 from robosat_spark.kernels import mercator as M
 from robosat_spark.kernels import raster as R
+from robosat_spark.sources.fixtures import PARKING_0, PARKING_1
 
 
 def _parking_rings():
-    d = json.load(open("/root/reference/tests/fixtures/parking/features.geojson"))
-    return [np.asarray(f["geometry"]["coordinates"][0]) for f in d["features"]]
+    return [np.asarray(PARKING_0), np.asarray(PARKING_1)]
 
 
 def _tile_transform(x, y, z, size):
@@ -71,14 +69,20 @@ def test_morphology_close_fills_holes():
 
 
 def test_find_contours_square():
-    mask = np.zeros((16, 16), np.uint8)
-    mask[4:10, 4:10] = 1
-    contours, hierarchy = R.find_contours(mask)
-    assert len(contours) == 1
-    assert hierarchy[0]["parent"] == -1 and not hierarchy[0]["is_hole"]
-    pts = contours[0]
-    assert pts[:, 0].min() == 4 and pts[:, 0].max() == 9
-    assert pts[:, 1].min() == 4 and pts[:, 1].max() == 9
+    square = np.zeros((16, 16), np.uint8)
+    square[4:10, 4:10] = 1
+    # a blob whose first pixel has background on both sides: still one
+    # outer border, never a hole
+    spur = np.zeros((6, 8), np.uint8)
+    spur[1, 2] = 1
+    spur[2:4, 1:6] = 1
+    for mask, (x0, x1, y0, y1) in ((square, (4, 9, 4, 9)), (spur, (1, 5, 1, 3))):
+        contours, hierarchy = R.find_contours(mask)
+        assert len(contours) == 1
+        assert hierarchy == [{"parent": -1, "is_hole": False}]
+        pts = contours[0]
+        assert pts[:, 0].min() == x0 and pts[:, 0].max() == x1
+        assert pts[:, 1].min() == y0 and pts[:, 1].max() == y1
 
 
 def test_find_contours_hole_hierarchy():

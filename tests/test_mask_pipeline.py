@@ -108,9 +108,13 @@ def test_merge_keeps_separate_features(spark):
 
 def test_dedupe_iou_thresholds(spark):
     """IoU golden pairs {0, ~0.3, ~0.55, ~0.9}: with threshold 0.5 the
-    0/0.3 'a' shapes are kept, the 0.55/0.9 ones dropped."""
+    0/0.3 'a' shapes are kept, the 0.55/0.9 ones dropped. The far-away
+    parking lot has no osm feature in any of its cells: kept, iou 0."""
     ft = FX.features(spark)
-    pred = ft.filter(F.col("props")["src"].rlike("^ioupair-\\d+-a$"))
+    pred = ft.filter(
+        F.col("props")["src"].rlike("^ioupair-\\d+-a$")
+        | (F.col("props")["src"] == "reference-parking-1")
+    )
     osm = ft.filter(F.col("props")["src"].rlike("^ioupair-\\d+-b$"))
     verdicts = dedupe(spark, pred, osm, threshold=0.5, cell_zoom=14)
     by_src = {}
@@ -123,6 +127,8 @@ def test_dedupe_iou_thresholds(spark):
     assert by_src["ioupair-3-a"]["keep"] is False  # iou ~ 0.9
     assert by_src["ioupair-1-a"]["iou"] == pytest.approx(0.3, abs=0.05)
     assert by_src["ioupair-3-a"]["iou"] == pytest.approx(0.9, abs=0.05)
+    lonely = by_src["reference-parking-1"]
+    assert (lonely["keep"], lonely["iou"], lonely["n_candidates"]) == (True, 0.0, 0)
     for row in verdicts.collect():
         assert 0.0 <= row["iou"] <= 1.0  # spatial/core.py:75 invariant
 

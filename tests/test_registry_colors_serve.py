@@ -9,13 +9,13 @@ from robosat_spark.functions.colors import COLORS, class_palette, continuous_pal
 
 def test_registry_builtins_present():
     assert "cover" in registry.names("expand")
-    assert {"assign_salted", "merge_features", "minhash_lsh_pairs"} <= set(
+    assert {"assign", "merge_features", "minhash_lsh_pairs"} <= set(
         registry.names("grouped")
     )
     assert {"tile_x", "simhash", "road_width_m"} <= set(registry.names("scalar"))
     assert "pages_from_events" in registry.names("source")
     assert "write_slippy_grids" in registry.names("sink")
-    k = registry.get("assign_salted")
+    k = registry.get("assign")
     assert callable(k.fn) and k.kind == "grouped"
     with pytest.raises(KeyError):
         registry.get("nope")

@@ -36,14 +36,14 @@ def test_hot_tile_exists_and_salting_balances(spark):
 
 
 def test_pages_table_catalog_path(spark):
-    from robosat_spark.operators.spatial_join import assign_broadcast
+    from robosat_spark.operators.spatial_join import assign
     from robosat_spark.sources.fixtures import features
     from robosat_spark.sources.pages import pages, pages_table
 
     pages(spark, 2000).createOrReplaceTempView("pages_v")
     pg = pages_table(spark, "pages_v")
     assert pg.columns == ["url", "warc_ts", "html", "text", "lang"]
-    out = assign_broadcast(spark, pg, features(spark), zoom=16)
+    out = assign(spark, pg, features(spark), zoom=16)
     assert out.count() > 0
 
 
@@ -103,31 +103,22 @@ def test_checkpointed_mask_pipeline_resume(spark, tmp_path):
 
 
 def test_assign_auto_forces_both_paths_identical(spark):
-    """Auto strategy selection (round-1 review item 9): broadcast and
-    distributed paths must return identical row sets, and the budget knob
-    must actually flip the choice."""
-    from robosat_spark.operators.spatial_join import (
-        assign_auto,
-        choose_assign_strategy,
-        estimate_feature_bytes,
-    )
+    """The two physical plans of the flagship join — broadcast index +
+    Arrow refine (``assign``) and JVM cover join + codegen refine
+    (``assign_cover_join``) — must return identical row sets."""
+    from robosat_spark.operators.spatial_join import assign, assign_cover_join
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, "/root/testdata/sf0.001")
     ft = oracle_rect_features(spark)
 
-    est = estimate_feature_bytes(ft)
-    assert est > 0
-    assert choose_assign_strategy(ft, max_broadcast_bytes=est + 1) == "broadcast"
-    assert choose_assign_strategy(ft, max_broadcast_bytes=est - 1) == "distributed"
-
     cols = ["url", "feature_id"]
-    bc = assign_auto(spark, pg, ft, zoom=7, max_broadcast_bytes=64 << 20)
-    dist = assign_auto(spark, pg, ft, zoom=7, max_broadcast_bytes=1)
-    got_bc = sorted(map(tuple, bc.select(*cols).collect()))
-    got_dist = sorted(map(tuple, dist.select(*cols).collect()))
-    assert got_bc == got_dist and len(got_bc) > 0
+    got_bc = sorted(map(tuple, assign(spark, pg, ft, zoom=7).select(*cols).collect()))
+    got_jvm = sorted(
+        map(tuple, assign_cover_join(spark, pg, ft, zoom=7).select(*cols).collect())
+    )
+    assert got_bc == got_jvm and len(got_bc) > 0
 
 
 def test_flagship_scan_prunes_payload_columns(spark, tmp_path):
@@ -157,7 +148,7 @@ def test_assign_count_variants_identical(spark):
     pg = pages_from_events(spark, "/root/testdata/sf0.001")
     ft = oracle_rect_features(spark)
     fused = assign_count_by_feature(spark, pg, ft, zoom=7)
-    salted = assign_count_by_feature(spark, pg, ft, zoom=7, repartition_by_cell=True)
+    salted = assign_count_by_feature(spark, pg, ft, zoom=7, cluster_by_cell=True)
     a = sorted(map(tuple, fused.collect()))
     b = sorted(map(tuple, salted.collect()))
     assert a == b and len(a) > 0

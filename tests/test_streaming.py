@@ -46,6 +46,36 @@ def test_streaming_tile_counts_match_batch(spark, pages_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
+def _assert_geotag_barrier(df):
+    """The isNotNull(lon/lat) filter must sit above the Project that holds
+    the geotag parse behind its always-true spark_partition_id() guard:
+    pushed below it, the filter re-inlines the parse onto the scan. A
+    Spark that constant-folds the guard removes it from the Project and
+    fails here too."""
+    # explainString, not optimizedPlan(): the latter refuses a streaming
+    # source outside writeStream
+    jvm = df.sparkSession._jvm
+    text = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "extended")
+    optimized = text.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+    lines = optimized.lower().splitlines()
+    parse = [
+        i for i, line in enumerate(lines)
+        if "project" in line and "spark_partition_id() >= 0" in line and "geo:" in line
+    ]
+    nonnull = [i for i, line in enumerate(lines) if "filter" in line and "isnotnull(lon" in line]
+    assert len(parse) == 1 and nonnull, "\n".join(lines)
+    assert max(nonnull) < parse[0], "\n".join(lines)
+    assert not any("filter" in line and "geo:" in line for line in lines), "\n".join(lines)
+
+
+def test_geotag_barrier_plan_shape_batch_and_stream(spark, pages_dir):
+    from robosat_spark.operators.spatial_join import geotagged_points
+
+    _assert_geotag_barrier(geotagged_points(spark.read.parquet(pages_dir), 12))
+    stream = streaming_pages(spark, pages_dir)
+    _assert_geotag_barrier(streaming_tile_counts(stream, zoom=12, window="6 hours"))
+
+
 def test_streaming_hll_registers_match_batch(spark, pages_dir, tmp_path):
     """Streamed HLL registers == batch hll_buckets over the same files
     (monotone MAX state, <= 2^p rows), so the batch estimator reads the
@@ -280,9 +310,9 @@ def test_stateful_tile_counter_event_time_ttl(spark, tmp_path):
 
 def test_streaming_flagship_spatial_join_matches_batch(spark, pages_dir, tmp_path):
     """The flagship PIP join on a stream (stream-static broadcast cover
-    join + codegen refine) must equal the batch assign_jvm counts on the
-    same files."""
-    from robosat_spark.operators.spatial_join import assign_jvm
+    join + codegen refine) must equal the batch assign_cover_join counts on
+    the same files."""
+    from robosat_spark.operators.spatial_join import assign_cover_join
     from robosat_spark.sources.fixtures import features as fixture_features
     from robosat_spark.streaming.ingest import streaming_feature_counts
 
@@ -295,7 +325,7 @@ def test_streaming_flagship_spatial_join_matches_batch(spark, pages_dir, tmp_pat
         for r in spark.sql("select * from feat_counts").collect()
     }
 
-    batch = assign_jvm(spark, spark.read.parquet(pages_dir), ft, zoom=16)
+    batch = assign_cover_join(spark, spark.read.parquet(pages_dir), ft, zoom=16)
     want = {
         (r["bucket"], r["feature_id"]): r["n_pages"]
         for r in batch.groupBy(F.window("warc_ts", "6 hours").alias("w"), "feature_id")

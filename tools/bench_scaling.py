@@ -210,7 +210,7 @@ def main():
         "## Secondary pair: salted repartition-by-cell variant",
         "",
         "The cell-clustered-output path (salted repartition before the",
-        "refine, `repartition_by_cell=True`) measured on the same input,",
+        "refine, `cluster_by_cell=True`) measured on the same input,",
         "1 trial per level:",
         "",
         "| cpus (pinned) | throughput (rows/sec) |",

@@ -20,13 +20,13 @@ def main() -> None:
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    from robosat_spark.operators.spatial_join import assign_auto, assign_counts_per_tile
+    from robosat_spark.operators.spatial_join import assign, assign_counts_per_tile
     from robosat_spark.sources.oracle_features import oracle_rect_features
     from robosat_spark.sources.pages import pages_from_events
 
     pg = pages_from_events(spark, sf_dir)
     ft = oracle_rect_features(spark)
-    out = assign_counts_per_tile(assign_auto(spark, pg, ft, zoom=12))
+    out = assign_counts_per_tile(assign(spark, pg, ft, zoom=12))
     print(f"FLAGSHIP_ROWS={out.count()}")
     spark.stop()
 
