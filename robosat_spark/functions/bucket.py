@@ -296,6 +296,17 @@ _STR_TMP = (
 )
 
 
+def _require_free(df: DataFrame, names) -> None:
+    """Raise if ``df`` already has a column the chain uses as a temporary
+    (Spark resolves names case-insensitively by default): the chain would
+    silently overwrite and then drop it."""
+    taken = {c.lower() for c in df.columns}
+    for name in names:
+        if name.lower() in taken:
+            raise ValueError(f"input already has a column named {name!r}, "
+                             "which the hash chain uses as a temporary")
+
+
 def with_murmur3_string(df: DataFrame, src: str, out: str) -> DataFrame:
     """DataFrame form of the spec string hash as an SSA withColumn chain
     (same arithmetic as :func:`murmur3_32_string`, pinned to the same
@@ -305,7 +316,9 @@ def with_murmur3_string(df: DataFrame, src: str, out: str) -> DataFrame:
     is planned and codegen-evaluated exactly once. Replaced the nested
     Column form on the write path in r7: the inverted-index build over
     sf0.1 postings dropped ~60 s -> ~3 s (17 s of it pure Catalyst
-    analysis of the duplicated fold)."""
+    analysis of the duplicated fold). Raises ValueError if ``df`` already
+    has a column named like one of the temporaries (``_STR_TMP``)."""
+    _require_free(df, _STR_TMP)
     hx = F.col("__shx")
 
     def byte_at(i: Column) -> Column:
@@ -393,6 +406,9 @@ def iceberg_bucket_string(col: Column, n: int) -> Column:
 
 
 def with_bucket_string(df: DataFrame, src: str, out: str, n: int) -> DataFrame:
+    """Adds ``out`` = bucket[n] partition value of string column ``src``;
+    raises ValueError on a clash with a temporary column name."""
+    _require_free(df, ("__mhs",))
     w = with_murmur3_string(df, src, "__mhs")
     w = w.withColumn(
         out,

@@ -83,13 +83,15 @@ def bbox_intersects(a, b) -> bool:
 
 def ring_edges(ring):
     """Prepared edge table of one ring for :func:`points_in_edges`:
-    ``(minx, maxx, miny, maxy, x1, y1, y2, inv_dy)``, or None for a ring
-    of fewer than 3 vertices (it contains no point).
+    ``(minx, maxx, miny, maxy, x1, y1, lo, hi, inv_dy)``, or None for a
+    ring of fewer than 3 vertices (it contains no point).
 
     The bbox, the open/roll and the edge slopes are invariant across every
     batch of points tested against the ring, so a caller testing many
-    batches (the spatial-join refine) prepares them once. Horizontal edges
-    are dropped: their straddle term is identically false."""
+    batches (the spatial-join refine) prepares them once. Per edge,
+    ``lo``/``hi`` are ``min(y1, y2)``/``max(y1, y2)``: the edge straddles
+    exactly the points with ``lo <= py < hi``, which is the sweep's
+    search key. Horizontal edges are dropped: they straddle no point."""
     r = open_ring(ring)
     if len(r) < 3:
         return None
@@ -100,8 +102,43 @@ def ring_edges(ring):
     inv_dy = (x2k - x1k) / (y2k - y1k)
     return (
         float(x1.min()), float(x1.max()), float(y1.min()), float(y1.max()),
-        x1k[None, :], y1k[None, :], y2k[None, :], inv_dy[None, :],
+        x1k, y1k, np.minimum(y1k, y2k), np.maximum(y1k, y2k), inv_dy,
     )
+
+
+# (edge, point) pairs expanded at once; bounds the sweep's temporaries
+_PAIRS_PER_CHUNK = 1 << 20
+
+
+def _ring_parity(xs, ys, edge) -> np.ndarray:
+    """Crossing parity of points sorted by y (``ys`` ascending) against
+    one prepared edge table: the sorted sweep behind :func:`points_in_edges`.
+
+    An edge straddles the points with ``lo <= py < hi`` — the same test as
+    ``(y1 > py) != (y2 > py)`` — and over y-sorted points those form one
+    contiguous range, found by two ``searchsorted`` calls. The (edge,
+    point) pairs of all edges are expanded without a Python loop, in chunks
+    of about ``_PAIRS_PER_CHUNK`` pairs, and tested with the crossing
+    formula ``px < x1 + (py - y1) * inv_dy``; the parity per point is a
+    ``bincount``. Work grows with actual straddles, not with points x
+    edges."""
+    _, _, _, _, x1, y1, lo, hi, inv_dy = edge
+    start = ys.searchsorted(lo)
+    count = ys.searchsorted(hi) - start
+    ends = count.cumsum()
+    total = int(ends[-1]) if ends.size else 0
+    crossings = np.zeros(ys.size, dtype=np.intp)
+    e0 = base = 0
+    while base < total:
+        e1 = max(e0 + 1, int(ends.searchsorted(base + _PAIRS_PER_CHUNK, side="right")))
+        c, stop = count[e0:e1], int(ends[e1 - 1])
+        eid = np.repeat(np.arange(e0, e1), c)
+        # pair k of edge e tests sorted point start[e] + (k - first pair of e)
+        pos = np.arange(base, stop) + np.repeat(start[e0:e1] - (ends[e0:e1] - c), c)
+        hit = xs[pos] < x1[eid] + (ys[pos] - y1[eid]) * inv_dy[eid]
+        crossings += np.bincount(pos[hit], minlength=ys.size)
+        e0, base = e1, stop
+    return (crossings & 1).astype(bool)
 
 
 def points_in_edges(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
@@ -109,29 +146,22 @@ def points_in_edges(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
     prepared edge tables (:func:`ring_edges`): inside ``edges[0]`` (the
     exterior) and outside every later table (the holes).
 
-    Many points against one ring: O(P*E), evaluated in point blocks so the
-    (block x edges) temporaries stay cache-resident instead of streaming
-    P*E*8-byte matrices through DRAM — at 32 cores the unblocked form is
-    memory-bandwidth-bound and stops scaling. A bbox pre-cull skips the
-    edge loop for points that cannot be inside. Points exactly on an edge
-    may land either side (consistent with shapely's boundary fuzz — the
-    reference never relies on boundary points)."""
+    Per ring, a bbox pre-cull keeps the points that can be inside; those
+    are sorted by y once and swept against the edges (:func:`_ring_parity`),
+    so one ring costs O(P log P + crossings) for P culled points rather than
+    O(P x E), with temporaries bounded by the pair chunk. Points exactly on
+    an edge may land either side (consistent with shapely's boundary fuzz —
+    the reference never relies on boundary points)."""
     inside = None
     for i, edge in enumerate(edges):
         out = np.zeros(px.shape[0], dtype=bool)
         if edge is not None:
-            minx, maxx, miny, maxy, x1, y1, y2, inv_dy = edge
+            minx, maxx, miny, maxy = edge[:4]
             cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
             idx = np.nonzero(cand)[0]
-            block = 1024
-            for s in range(0, idx.size, block):
-                sel = idx[s : s + block]
-                bx = px[sel][:, None]
-                by = py[sel][:, None]
-                straddle = (y1 > by) != (y2 > by)
-                xint = x1 + (by - y1) * inv_dy
-                crossings = np.sum(straddle & (bx < xint), axis=1)
-                out[sel] = (crossings % 2) == 1
+            if idx.size:
+                order = idx[np.argsort(py[idx], kind="stable")]
+                out[order] = _ring_parity(px[order], py[order], edge)
         inside = out if i == 0 else (inside & ~out)
     return inside
 

@@ -171,9 +171,10 @@ def merge_features(
     Exteriors CCW, area = int Mollweide m² (merge.py:68-81 parity)."""
     br = buffered_rings(features, threshold_m).localCheckpoint(eager=False)
     edges = adjacency_edges(spark, features, threshold_m, cell_zoom, buffered=br)
-    self_loops = features.select(
-        F.col("feature_id").alias("src"), F.col("feature_id").alias("dst")
-    )
+    # nodes from the checkpointed buffered rings (one row per input
+    # feature), not from ``features``: that would run the whole upstream
+    # chain a second time inside the components job
+    self_loops = br.select(F.col("feature_id").alias("src"), F.col("feature_id").alias("dst"))
     labels = connected_components(edges.unionByName(self_loops))
 
     members = br.join(

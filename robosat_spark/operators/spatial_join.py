@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tiles import geotag_lat_fast, geotag_lon_fast, pack_tile_id, tile_x, tile_y
-from ..kernels.geometry import as_ring, points_in_edges, ring_edges
+from ..kernels.geometry import points_in_edges, ring_edges
 
 
 def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
@@ -79,23 +79,56 @@ def geotagged_points(pages: DataFrame, zoom: int) -> DataFrame:
     )
 
 
+def _ring_arrays(rings) -> list[list[np.ndarray]]:
+    """Arrow ``list<list<list<double>>>`` (one polygon per row) -> per row,
+    a list of dense (N, d) float64 rings cut out of the flattened
+    coordinate buffer — no per-point Python objects.
+
+    Lengths come from ``list_value_length`` and values from ``flatten``,
+    both of which honour an array's slice offset (raw ``.offsets`` would
+    not), so sliced or chunked arrays are safe."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(rings, pa.ChunkedArray):
+        rings = rings.combine_chunks()
+    n_rings = pc.list_value_length(rings).fill_null(0).to_numpy()
+    ring_lists = rings.flatten()
+    n_pts = pc.list_value_length(ring_lists).fill_null(0).to_numpy()
+    points = ring_lists.flatten()
+    n_coords = pc.list_value_length(points).to_numpy(zero_copy_only=False)
+    dims = np.unique(n_coords)
+    if dims.size > 1 or (dims.size and dims[0] < 2):
+        raise ValueError(f"ring points must share one dimension >= 2, got {dims.tolist()}")
+    d = int(dims[0]) if dims.size else 2
+    xy = points.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, d)
+    pt_off = np.concatenate([[0], np.cumsum(n_pts)]).tolist()
+    ring_off = np.concatenate([[0], np.cumsum(n_rings)]).tolist()
+    return [
+        [xy[pt_off[r] : pt_off[r + 1]] for r in range(ring_off[i], ring_off[i + 1])]
+        for i in range(len(n_rings))
+    ]
+
+
 def _collect_feature_index(features: DataFrame, zoom: int):
     """Driver-side build of {tile_id: [feature_id]} + {feature_id: rings}.
 
     The 'R-tree' of the reference (/root/reference/robosat/spatial/core.py:80-100)
     becomes a tile-bucketed index: the cover expansion IS the spatial index,
-    and equi-join on tile_id replaces the bbox probe. One collect of the
-    (small) feature table, then the cover kernel runs IN the driver — no
-    Spark job, no Python-worker spin-up, ~ms instead of seconds of fixed
-    cost per query."""
+    and equi-join on tile_id replaces the bbox probe. One Arrow collect of
+    the (small) feature table (``toArrow``: columnar end to end, no
+    per-point ``Row`` objects), rings cut out of its coordinate buffer with
+    NumPy (:func:`_ring_arrays`), then the cover kernel runs IN the driver
+    — no Python-worker spin-up, ~ms instead of seconds of fixed cost per
+    query."""
     from ..functions.tiles import pack_tile_id_py
     from ..kernels.raster import cover_rings
 
+    table = features.select("feature_id", "rings").toArrow()
+    fids = table.column("feature_id").to_pylist()
     tile_map: dict[int, list[int]] = {}
     rings_map: dict[int, list] = {}
-    for row in features.select("feature_id", "rings").collect():
-        fid = row["feature_id"]
-        rings = [as_ring(r) for r in row["rings"]]
+    for fid, rings in zip(fids, _ring_arrays(table.column("rings"))):
         rings_map[fid] = rings
         for x, y in cover_rings(rings, zoom):
             tile_map.setdefault(pack_tile_id_py(zoom, int(x), int(y)), []).append(fid)
@@ -119,13 +152,22 @@ def _candidates(
     are elsewhere, so this is the biggest data-volume cut in the plan, kept
     inside whole-stage codegen) -> projection to the columns the refine
     reads (Catalyst cannot prune into a UDF) -> optionally a salted
-    repartition by cell. The salt is a hash of the candidate row; the
-    partition count is explicit because AQE would otherwise coalesce the
-    byte-light exchange and strand the compute-heavy refine on a handful
-    of tasks."""
+    repartition by cell. The covered-tile side is built from an Arrow table,
+    which Spark plans as a ``LocalRelation``: its rows already sit in the
+    JVM, so the broadcast build is a short JVM-only collect. A list-built
+    side is a ``PythonRDD`` whose broadcast job first starts a Python
+    worker to unpickle the rows (noop semi-join of 1M rows against 603
+    tiles, 4 cores: 0.58 s -> 0.27 s median). The salt is a hash of the
+    candidate row; the partition count is explicit because AQE would
+    otherwise coalesce the byte-light exchange and strand the compute-heavy
+    refine on a handful of tasks."""
+    import pyarrow as pa
+
     index = _collect_feature_index(features, zoom)
     bc = spark.sparkContext.broadcast(index)
-    cover_tiles = spark.createDataFrame([(int(t),) for t in index[0]], "tile_id LONG")
+    cover_tiles = spark.createDataFrame(
+        pa.table({"tile_id": pa.array(list(index[0]), type=pa.int64())})
+    )
     pts = geotagged_points(pages, zoom).join(F.broadcast(cover_tiles), "tile_id", "left_semi")
     pts = pts.select(*cols)
     if cluster_by_cell:

@@ -66,12 +66,14 @@ def fan_out_small_scan(
     return df.repartition(int(n))
 
 
-def _split_units(path: str) -> int:
+def _split_units(path: str) -> int | None:
     """Number of independently scannable units (row groups summed over
-    files) — parquet's true split granularity. 0 if unreadable."""
-    try:
-        import pyarrow.parquet as pq
+    files) — parquet's true split granularity. None if a footer cannot be
+    read (the units are unknown)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    try:
         files = (
             [path]
             if os.path.isfile(path)
@@ -82,8 +84,8 @@ def _split_units(path: str) -> int:
             ]
         )
         return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    except Exception:
-        return 0
+    except (OSError, pa.ArrowInvalid):
+        return None
 
 
 def fan_out_unsplittable_scan(
@@ -119,7 +121,9 @@ def fan_out_unsplittable_scan(
     if nbytes < min_bytes or nbytes > max_bytes:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if _split_units(path) >= max(2, cores // 2):
+    units = _split_units(path)
+    # unknown units (unreadable footer): assume splittable, add no exchange
+    if units is None or units >= max(2, cores // 2):
         return df
     n = max(2, min(cores, nbytes // per_part))
     return df.repartition(int(n))

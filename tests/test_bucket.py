@@ -23,7 +23,9 @@ from robosat_spark.functions.bucket import (
     murmur3_32_string,
     parse_bucket_transform,
     with_bucket_long,
+    with_bucket_string,
     with_murmur3_long,
+    with_murmur3_string,
 )
 from robosat_spark.sources.iceberg import IcebergTable, upsert, write_iceberg
 
@@ -101,6 +103,36 @@ def test_spark_string_expr_matches_python_reference(spark):
         assert r["h"] == murmur3_32_py(r["v"].encode("utf-8")) & 0xFFFFFFFF, r["v"]
         assert r["b"] == iceberg_bucket_py(r["v"], 8), r["v"]
     assert murmur3_32_py(b"iceberg") & 0xFFFFFFFF == 1210000089  # anchor
+
+
+# the known-answer strings of the column-form test above, plus NULL
+_STR_VALS = ["", "a", "ab", "abc", "abcd", "abcde", "iceberg",
+             "https://example.com/path?q=1", "héllo wörld", "日本語テキスト",
+             "x" * 1000, "bbc.co.uk", None]
+
+
+def test_with_murmur3_string_matches_reference_and_rejects_temp_clash(spark):
+    """The SSA withColumn chain agrees with the Python reference on every
+    tail length, multi-byte UTF-8 and NULL, and refuses an input that
+    already has one of its temporary column names instead of overwriting
+    and dropping it."""
+    df = spark.createDataFrame([(v,) for v in _STR_VALS], "v STRING")
+    rows = with_murmur3_string(df, "v", "h").collect()
+    assert [r["v"] for r in rows] == _STR_VALS
+    for r in rows:
+        want = None if r["v"] is None else murmur3_32_py(r["v"].encode("utf-8")) & 0xFFFFFFFF
+        assert r["h"] == want, r["v"]
+    with pytest.raises(ValueError, match="__sh3"):
+        with_murmur3_string(df.withColumn("__sh3", F.lit(1)), "v", "h")
+
+
+def test_with_bucket_string_matches_reference_and_rejects_temp_clash(spark):
+    df = spark.createDataFrame([(v,) for v in _STR_VALS], "v STRING")
+    for r in with_bucket_string(df, "v", "b", 8).collect():
+        want = None if r["v"] is None else iceberg_bucket_py(r["v"], 8)
+        assert r["b"] == want, r["v"]
+    with pytest.raises(ValueError, match="__mhs"):
+        with_bucket_string(df.withColumn("__mhs", F.lit(7)), "v", "b", 8)
 
 
 @pytest.fixture()

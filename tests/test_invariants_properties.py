@@ -300,3 +300,105 @@ def test_exact_iou_properties(n, r0, r1, shift):
     assert abs(G.exact_iou([a], [a]) - 1.0) < 1e-12
     rast = G.raster_iou([a], [b], resolution=512)
     assert abs(ab - rast) < 0.025, (ab, rast)
+
+
+def _old_blocked_points_in_polygon(px, py, rings, block=1024):
+    """Reference implementation: the earlier P x E PIP kernel, kept
+    verbatim in arithmetic — per ring, every bbox-culled point is tested
+    against every non-horizontal edge in blocks of ``block`` points."""
+    inside = None
+    for i, ring in enumerate(rings):
+        out = np.zeros(px.shape[0], dtype=bool)
+        r = G.open_ring(ring)
+        if len(r) >= 3:
+            x1, y1 = r[:, 0], r[:, 1]
+            x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+            keep = y1 != y2
+            ex1, ey1, ey2 = x1[keep][None, :], y1[keep][None, :], y2[keep][None, :]
+            inv_dy = ((x2[keep] - x1[keep]) / (y2[keep] - y1[keep]))[None, :]
+            cand = (px >= x1.min()) & (px <= x1.max()) & (py >= y1.min()) & (py <= y1.max())
+            idx = np.nonzero(cand)[0]
+            for s in range(0, idx.size, block):
+                sel = idx[s : s + block]
+                bx, by = px[sel][:, None], py[sel][:, None]
+                straddle = (ey1 > by) != (ey2 > by)
+                xint = ex1 + (by - ey1) * inv_dy
+                out[sel] = (np.sum(straddle & (bx < xint), axis=1) % 2) == 1
+        inside = out if i == 0 else (inside & ~out)
+    return inside
+
+
+def _exact_parity(points, ring):
+    """Independent int64 crossing number: a ray to +x crosses edge
+    (a, b) iff the edge straddles the ray's y half-openly and the exact
+    rational crossing x lies strictly right of the point. -> (odd, on
+    the ring's boundary) per point."""
+    odd, on_edge = [], []
+    edges = list(zip(ring, ring[1:] + ring[:1]))
+    for px, py in points:
+        n, boundary = 0, False
+        for (ax, ay), (bx, by) in edges:
+            cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
+            if cross == 0 and min(ax, bx) <= px <= max(ax, bx) and min(ay, by) <= py <= max(ay, by):
+                boundary = True
+            if (ay > py) != (by > py):
+                # px < ax + (py - ay) * (bx - ax) / (by - ay), without division
+                lhs, rhs = (px - ax) * (by - ay), (py - ay) * (bx - ax)
+                n += (lhs < rhs) if by > ay else (lhs > rhs)
+        odd.append(n % 2 == 1)
+        on_edge.append(boundary)
+    return np.array(odd, dtype=bool), np.array(on_edge, dtype=bool)
+
+
+def _lattice_points_on(ring):
+    """Every lattice point on every edge of ``ring``, vertices included."""
+    from math import gcd
+
+    out = []
+    for (ax, ay), (bx, by) in zip(ring, ring[1:] + ring[:1]):
+        g = max(gcd(bx - ax, by - ay), 1)
+        out += [(ax + k * (bx - ax) // g, ay + k * (by - ay) // g) for k in range(g + 1)]
+    return out
+
+
+_lattice = st.tuples(st.integers(-12, 12), st.integers(-12, 12))
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(_lattice, min_size=3, max_size=10),
+    st.booleans(),
+    st.lists(_lattice, min_size=0, max_size=30),
+)
+def test_points_in_polygon_matches_exact_lattice_reference(ring, with_hole, pts):
+    """points_in_polygon on integer-lattice rings (coarse, so horizontal
+    edges and collinear runs are common; self-intersections allowed —
+    the even-odd rule is still defined) against an exact int64 crossing
+    number, with and without a hole. Point sets: the drawn points (P = 0
+    and P = 1 included), every lattice point on an edge or vertex, and
+    duplicates. Points on the boundary may land either side in floating
+    point, so the exact comparison skips them; the sweep kernel must
+    still match the earlier blocked kernel bit for bit on every point,
+    also with a pair chunk so small that every edge is its own chunk."""
+    from unittest import mock
+
+    hole = [(-3, -3), (-3, 3), (3, 3), (3, -3)] if with_hole else None
+    rings = [ring] + ([hole] if hole else [])
+    boundary = [p for r in rings for p in _lattice_points_on(r)]
+    for points in (pts, pts + boundary, pts + pts):
+        px = np.array([p[0] for p in points], dtype=np.float64)
+        py = np.array([p[1] for p in points], dtype=np.float64)
+        arrs = [np.asarray(r, dtype=np.float64) for r in rings]
+        got = G.points_in_polygon(px, py, arrs)
+        assert got.dtype == bool and got.shape == (len(points),)
+
+        want, on_edge = _exact_parity(points, ring)
+        if hole:
+            in_hole, on_hole = _exact_parity(points, hole)
+            want, on_edge = want & ~in_hole, on_edge | on_hole
+        assert np.array_equal(got[~on_edge], want[~on_edge])
+
+        old = _old_blocked_points_in_polygon(px, py, arrs)
+        assert np.array_equal(G.points_in_edges(px, py, [G.ring_edges(r) for r in arrs]), old)
+        with mock.patch.object(G, "_PAIRS_PER_CHUNK", 1):
+            assert np.array_equal(G.points_in_polygon(px, py, arrs), old)

@@ -106,6 +106,26 @@ def test_merge_keeps_separate_features(spark):
     assert sum(r["n_members"] for r in rows) == 4
 
 
+def test_merge_evaluates_its_input_once(spark):
+    """merge_features reads its input through the checkpointed buffered
+    rings only: an upstream map that counts its rows with an accumulator
+    sees each input row once, not once more for the components' nodes."""
+    ft = FX.features(spark)
+    cluster = ft.filter(F.col("props")["src"] == "merge-cluster").select("feature_id", "rings")
+    n_in = cluster.count()
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    upstream = cluster.mapInPandas(counted, cluster.schema)
+    rows = merge_features(spark, upstream, threshold_m=25.0, cell_zoom=16).collect()
+    assert sum(r["n_members"] for r in rows) == n_in == 3
+    assert seen.value == n_in
+
+
 def test_dedupe_iou_thresholds(spark):
     """IoU golden pairs {0, ~0.3, ~0.55, ~0.9}: with threshold 0.5 the
     0/0.3 'a' shapes are kept, the 0.55/0.9 ones dropped. The far-away

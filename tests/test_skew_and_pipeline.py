@@ -176,3 +176,85 @@ def test_gate_plans_have_no_pathological_joins(spark):
         ).executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "CartesianProduct" not in plan, name
+
+
+def test_unsplittable_scan_with_unreadable_footer_adds_no_exchange(spark, tmp_path):
+    """A truncated parquet file has no readable footer, so its split units
+    are unknown: the fan-out treats it as splittable and returns the input
+    unchanged instead of adding an unconditional repartition."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from robosat_spark.sources.scan import fan_out_unsplittable_scan
+
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"v": list(range(5000))}), good)
+    data = good.read_bytes()
+    (tmp_path / "part-0.parquet").write_bytes(data[: len(data) // 2])
+    good.unlink()
+    df = spark.range(100)
+    out = fan_out_unsplittable_scan(spark, df, str(tmp_path), min_bytes=1)
+    assert out is df
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_unsplittable_scan_propagates_unexpected_errors(spark, tmp_path, monkeypatch):
+    """Only unreadable files are tolerated; a programming error inside the
+    footer read propagates instead of silently disabling the gate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from robosat_spark.sources.scan import fan_out_unsplittable_scan
+
+    pq.write_table(pa.table({"v": list(range(5000))}), tmp_path / "part-0.parquet")
+
+    def broken(*args, **kwargs):
+        raise TypeError("boom")
+
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(TypeError, match="boom"):
+        fan_out_unsplittable_scan(spark, spark.range(100), str(tmp_path), min_bytes=1)
+
+
+def test_feature_index_matches_row_collect_on_chunked_arrow(spark):
+    """The Arrow-built driver index equals a collect()-row reference on a
+    multi-partition feature table (so ``toArrow`` returns several chunks),
+    holes included; and the cover-tile side of the candidate plan is a
+    job-free LocalRelation, not an RDD."""
+    import numpy as np
+
+    from robosat_spark.functions.tiles import pack_tile_id_py
+    from robosat_spark.kernels.geometry import as_ring
+    from robosat_spark.kernels.raster import cover_rings
+    from robosat_spark.operators.spatial_join import _candidates, _collect_feature_index
+    from robosat_spark.sources.fixtures import features
+    from robosat_spark.sources.pages import pages
+
+    zoom = 16
+    ft = features(spark).select("feature_id", "rings").repartition(3).localCheckpoint()
+    assert ft.rdd.getNumPartitions() >= 3
+    assert len(ft.toArrow().column("rings").chunks) >= 2
+    rows = ft.collect()
+    assert any(len(r["rings"]) > 1 for r in rows), "fixture needs a polygon with a hole"
+
+    want_tiles: dict = {}
+    want_rings: dict = {}
+    for row in rows:
+        rings = [as_ring(r) for r in row["rings"]]
+        want_rings[row["feature_id"]] = rings
+        for x, y in cover_rings(rings, zoom):
+            want_tiles.setdefault(pack_tile_id_py(zoom, int(x), int(y)), []).append(
+                row["feature_id"]
+            )
+    tile_map, rings_map = _collect_feature_index(ft, zoom)
+    assert tile_map == want_tiles
+    assert rings_map.keys() == want_rings.keys()
+    for fid, rings in want_rings.items():
+        got = rings_map[fid]
+        assert len(got) == len(rings)
+        for a, b in zip(got, rings):
+            assert a.dtype == b.dtype and a.shape == b.shape and np.array_equal(a, b), fid
+
+    _, pts = _candidates(spark, pages(spark, 200), ft, zoom, ["lon", "lat", "tile_id"], False)
+    plan = pts._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
